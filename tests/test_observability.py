@@ -252,6 +252,41 @@ def test_explain_features_tiers():
     assert bool(rep2.loc["v__sum__w=4h", "two_level"])
 
 
+@pytest.mark.parametrize(
+    "descs",
+    [
+        # the benchmark's grid: fan-out 2 and 24, one shared 5 s table
+        [("sum", "10s", ["5s", "15s"]), ("std", "10s", ["5s", "15s"]),
+         ("max", "120s", ["5s", "15s"]), ("var", "120s", ["5s", "15s"])],
+        # a holistic aggregate keeps its whole config one-level
+        [("sum", "60s", "10s"), ("median", "60s", "10s"), ("mean", "30s", "10s")],
+        # co-prime windows: no shared grain, each config its own table
+        [("sum", "21s", "7s"), ("max", "20s", "5s"), ("min", "13s", "13s")],
+    ],
+)
+def test_explain_two_level_matches_plan(spark, descs):
+    """explain_features' two_level is the path calculate() takes: true
+    exactly when the config's compiled frame holds the __bkt bucket
+    aggregate."""
+    import contextlib
+    import io
+
+    ts = pd.date_range("2024-01-01", periods=600, freq="1s")
+    df = spark.createDataFrame(pd.DataFrame({"ts": ts, "v": np.arange(600.0)}))
+    fc = FeatureCollection([FeatureDescriptor(f, "v", w, s) for f, w, s in descs])
+    rep = fc.explain_features().set_index("output")["two_level"]
+    frames = fc.calculate(df, ts_col="ts", return_df=False)
+    seen = set()
+    for frame in frames:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            frame.explain("simple")
+        outs = [c for c in frame.columns if c != "ts"]
+        assert {bool(rep[o]) for o in outs} == {"__bkt" in buf.getvalue()}, outs
+        seen.update(outs)
+    assert seen == set(rep.index)
+
+
 def test_vectorized_batched_2d(spark):
     """vectorized=True numpy funcs get the reference's true (nb, window)
     batch (strided_rolling.py:379-453) when segments are equal-length: the

@@ -182,6 +182,41 @@ def test_fine_stride_takes_two_level_plan(spark):
     assert "__bkt" in plan, plan[:2000]
 
 
+def test_decomposable_configs_share_one_bucket_table(spark, tmp_path):
+    """Two decomposable (window, strides) configs roll out of ONE bucket
+    table: the executed plan holds one partial aggregate keyed on __bkt
+    and scans the input parquet once (the second consumer reuses the
+    exchange); the keyed bounds checkpoint is a separate RDD scan."""
+    import numpy as np
+
+    from tsflex_spark import FeatureCollection, MultipleFeatureDescriptors
+
+    n = 4 * 600
+    pdf = pd.DataFrame(
+        {
+            "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(n) % 600, unit="s"),
+            "subject": np.repeat(["a", "b", "c", "d"], 600),
+            "x": np.arange(n) / 100.0,
+        }
+    )
+    spark.createDataFrame(pdf).write.parquet(str(tmp_path / "in"))
+    df = spark.read.parquet(str(tmp_path / "in"))
+    fc = FeatureCollection(
+        MultipleFeatureDescriptors(["sum", "min", "mean", "std"], "x", ["10s", "120s"], ["5s", "15s"])
+    )
+    out = fc.calculate(df, key_cols=["subject"])
+    out.collect()  # AQE: exchange reuse only shows in the final plan
+    final = plan_of(out, "simple").split("== Initial Plan ==")[0]
+    partial_bkt = [
+        ln for ln in final.splitlines()
+        if "HashAggregate" in ln and "__bkt" in ln and "partial_" in ln
+    ]
+    assert len(partial_bkt) == 1, final
+    assert final.count("FileScan parquet") == 1, final
+    assert "ReusedExchange" in final, final
+    assert "Scan ExistingRDD" in final  # the bounds checkpoint
+
+
 def test_manual_segments_bucketed_equi_join(spark):
     """User-supplied segments must join via bucketed hash equi-joins —
     never a BroadcastNestedLoopJoin on the raw range predicate."""

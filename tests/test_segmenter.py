@@ -15,6 +15,9 @@ from pyspark.sql import functions as F
 from tests.conftest import ref_segment_starts
 from tsflex_spark import FeatureCollection, FeatureDescriptor
 
+# tests that force a plan path restore this default afterwards
+_DEFAULT_FANOUT_THRESHOLD = FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD
+
 
 def _seq_df(spark, n=20):
     pdf = pd.DataFrame({"ts": np.arange(n, dtype=np.int64), "val": np.arange(n, dtype=np.float64)})
@@ -465,7 +468,7 @@ def test_two_level_rewrite_equivalence(spark):
         FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1  # force ON
         two = fc.calculate(df, ts_col="ts", include_final_window=True).toPandas()
     finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = _DEFAULT_FANOUT_THRESHOLD
     one = one.sort_values("ts").reset_index(drop=True)
     two = two.sort_values("ts").reset_index(drop=True)
     assert list(one.columns) == list(two.columns)
@@ -512,7 +515,7 @@ def test_two_level_moments_and_two_series(spark):
         FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1  # force ON
         two = fc.calculate(df, ts_col="ts").toPandas()
     finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = _DEFAULT_FANOUT_THRESHOLD
     one = one.sort_values("ts").reset_index(drop=True)
     two = two.sort_values("ts").reset_index(drop=True)
     assert list(one.columns) == list(two.columns)
@@ -719,7 +722,7 @@ def test_two_level_rewrite_equivalence_keyed(spark):
         FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1
         two = fc.calculate(df, ts_col="ts", key_cols=["k"]).toPandas()
     finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = _DEFAULT_FANOUT_THRESHOLD
     one = one.sort_values(["k", "ts"]).reset_index(drop=True)
     two = two.sort_values(["k", "ts"]).reset_index(drop=True)
     assert len(one) == len(two)
@@ -921,7 +924,7 @@ def test_two_level_threshold_counts(spark):
         FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1
         two = fc.calculate(df, ts_col="ts").toPandas()
     finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = _DEFAULT_FANOUT_THRESHOLD
     one = one.sort_values("ts").reset_index(drop=True)
     two = two.sort_values("ts").reset_index(drop=True)
     assert list(one.columns) == list(two.columns)
@@ -1153,7 +1156,7 @@ def test_two_level_new_natives_parity(spark):
         FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1
         two = fc.calculate(sdf, ts_col="ts", approve_sparsity=True).toPandas()
     finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = _DEFAULT_FANOUT_THRESHOLD
     one = one.sort_values("ts").reset_index(drop=True)
     two = two.sort_values("ts").reset_index(drop=True)
     assert len(one) >= 8 and list(one.columns) == list(two.columns)
@@ -1384,7 +1387,7 @@ def test_two_level_rewrite_fuzz(spark):
             FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1  # force ON
             two = fc.calculate(df, **kw).toPandas()
         finally:
-            FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+            FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = _DEFAULT_FANOUT_THRESHOLD
         one = one.sort_values("ts").reset_index(drop=True)
         two = two.sort_values("ts").reset_index(drop=True)
         assert list(one.columns) == list(two.columns)
@@ -1442,3 +1445,95 @@ def test_count_based_rolling_fuzz(spark):
         assert np.allclose(got, exp_vals), (starts, got, exp_vals)
 
     prop()
+
+
+def _shared_table_collection():
+    """Two configs that share one 10 s bucket table, one co-prime config
+    that falls back to its own 35 s grain, and a holistic (median) config
+    that stays one-level."""
+    from tsflex_spark import MultipleFeatureDescriptors
+
+    funcs = ["sum", "count", "min", "max", "mean", "std", "var"]
+    return FeatureCollection(
+        [
+            MultipleFeatureDescriptors(funcs, ["v", "w"], "60s", ["20s", "30s"]),
+            MultipleFeatureDescriptors(funcs, ["v", "w"], "120s", "30s"),
+            MultipleFeatureDescriptors(["sum", "max"], "v", "70s", "35s"),
+            FeatureDescriptor("median", "w", "40s", "20s"),
+        ]
+    )
+
+
+def test_shared_bucket_table_grains():
+    """The grid configs of one call group onto bucket tables: the 60 s and
+    120 s configs share the 10 s gcd grain, the co-prime 70 s config falls
+    back to its own 35 s grain, the holistic config has none."""
+    fc = _shared_table_collection()
+    s = 1_000_000
+    assert fc._bucket_grains(fc._configs(True)) == {
+        (60 * s, (20 * s, 30 * s)): 10 * s,
+        (120 * s, (30 * s,)): 10 * s,
+        (70 * s, (35 * s,)): 35 * s,
+    }
+
+
+@pytest.mark.parametrize(
+    "keyed,window_idx,include_final,bound_method",
+    [
+        (False, "end", False, "inner"),
+        (True, "begin", True, "outer"),
+        (True, "middle", False, "inner-outer"),
+        (False, "middle", True, "outer"),
+    ],
+)
+def test_shared_bucket_table_parity(spark, keyed, window_idx, include_final, bound_method):
+    """A multi-config calculate() through the shared bucket tables equals
+    the forced one-level plan: bit-exact for sums, counts and extrema,
+    last-ulp for the moments (mean/std/var), with empty windows, both
+    index positions and every bound method (the two series span
+    different ranges)."""
+    rng = np.random.default_rng(3)
+    rows = 1500
+    secs = np.sort(rng.choice(7200, size=rows, replace=False))
+    pdf = pd.DataFrame(
+        {
+            "ts": pd.to_datetime("2024-01-01") + pd.to_timedelta(secs, unit="s"),
+            "k": rng.integers(0, 3, size=rows),
+            "v": rng.integers(0, 10000, size=rows) / 100.0,
+            "w": rng.integers(0, 10000, size=rows) / 100.0,
+        }
+    )
+    pdf.loc[(secs < 600) | (secs > 6600), "w"] = np.nan
+    df = (
+        spark.createDataFrame(pdf)
+        .withColumn("v", F.col("v").cast("decimal(18,2)"))
+        .withColumn("w", F.when(~F.isnan("w"), F.col("w")).cast("decimal(18,2)"))
+    )
+    fc = _shared_table_collection()
+    keys = ["k"] if keyed else []
+    kw = dict(
+        ts_col="ts", key_cols=keys, window_idx=window_idx,
+        include_final_window=include_final, bound_method=bound_method,
+        approve_sparsity=True,
+    )
+    try:
+        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 10**9  # force one-level
+        one = fc.calculate(df, **kw).toPandas()
+    finally:
+        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = _DEFAULT_FANOUT_THRESHOLD
+    two = fc.calculate(df, **kw).toPandas()
+    one = one.sort_values([*keys, "ts"]).reset_index(drop=True)
+    two = two.sort_values([*keys, "ts"]).reset_index(drop=True)
+    assert list(one.columns) == list(two.columns)
+    assert len(one) == len(two) > 0
+    for c in one.columns:
+        a, b = one[c], two[c]
+        assert (a.isna() == b.isna()).all(), c
+        if any(f"__{m}__" in c for m in ("mean", "std", "var")):
+            both = ~a.isna()
+            assert np.allclose(
+                a[both].astype(float), b[both].astype(float), rtol=1e-9, atol=1e-9
+            ), c
+        else:
+            same = (a == b) | (a.isna() & b.isna())
+            assert same.all(), (c, one[~same].head(), two[~same].head())

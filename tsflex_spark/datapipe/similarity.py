@@ -341,7 +341,14 @@ def knn_join(
             top = min(kk, S.shape[1])
             idx = np.argpartition(S, top - 1, axis=1)[:, :top]
             ids = pdf[id_col].to_numpy()
-            vals = np.take_along_axis(S, idx, axis=1).ravel()
+            if metric == "cosine":
+                vals = np.take_along_axis(S, idx, axis=1).ravel()
+            else:
+                # re-score the kept candidates with the direct Σ(q−c)²:
+                # the expanded form's cancellation error (~1 ulp of |q|²)
+                # can rank an exact match (d2 = 0) behind a near copy
+                diff = Q[:, None, :] - C[idx]
+                vals = np.einsum("qkd,qkd->qk", diff, diff).ravel()
             yield pd.DataFrame(
                 {
                     q_id_col: np.repeat(qids, top),

@@ -410,7 +410,7 @@ def native_names() -> list[str]:
 
 
 # --- two-level (partial/final) decomposition --------------------------------
-# For the pre-aggregation rewrite (feature_collection._run_grid_two_level):
+# For the shared bucket table (feature_collection._bucket_table):
 # a decomposable aggregate is computed as partial aggregates over aligned
 # buckets, then a final aggregate over each segment's buckets. Only
 # algebraically-exact decompositions are registered — order-sensitive or
@@ -448,18 +448,24 @@ def _sqrt_nonneg(v: Column) -> Column:
     return F.when(v.isNotNull(), F.sqrt(F.greatest(v, F.lit(0.0))))
 
 
+def _var_num(p: dict) -> Column:
+    """``n·Σv² − (Σv)²`` in the partials' own type when it does not
+    overflow — exact for decimal inputs, so a one-sample or constant
+    window is exactly 0 as under one-level Welford — else in doubles."""
+    n, sv, sq = F.sum(p["cnt"]), F.sum(p["sum"]), F.sum(p["sumsq"])
+    exact = F.try_subtract(F.try_multiply(n, sq), F.try_multiply(sv, sv))
+    nd, svd = n.cast("double"), sv.cast("double")
+    return F.coalesce(exact.cast("double"), nd * sq.cast("double") - svd * svd)
+
+
 def _var_pop_final(p: dict) -> Column:
     n = F.sum(p["cnt"]).cast("double")
-    sv = F.sum(p["sum"]).cast("double")
-    sq = F.sum(p["sumsq"]).cast("double")
-    return F.when(n > 0, (n * sq - sv * sv) / (n * n))
+    return F.when(n > 0, _var_num(p) / (n * n))
 
 
 def _var_samp_final(p: dict) -> Column:
     n = F.sum(p["cnt"]).cast("double")
-    sv = F.sum(p["sum"]).cast("double")
-    sq = F.sum(p["sumsq"]).cast("double")
-    return F.when(n > 1, (n * sq - sv * sv) / (n * (n - 1)))
+    return F.when(n > 1, _var_num(p) / (n * (n - 1)))
 
 
 # name -> (needed partial kinds, final builder over {kind: partial Column})
@@ -483,7 +489,7 @@ _DECOMPOSABLE: dict[str, tuple] = {
     "first": (("firstv", "mintsn"), lambda p: F.min_by(p["firstv"], p["mintsn"])),
     "last": (("lastv", "maxtsn"), lambda p: F.max_by(p["lastv"], p["maxtsn"])),
     # moments from exact sums (n, Σv, Σv²): EXACT for decimal/integer
-    # inputs; for double inputs this is the textbook formula — decomposable
+    # inputs (_var_num); for double inputs this is the textbook formula — decomposable
     # but subject to cancellation where one-level Welford (stddev_pop)
     # is stable, hence the possible last-ulp drift already documented on
     # the two-level rewrite. ddof handled in decomposition().

@@ -10,12 +10,25 @@ run in one Arrow ``applyInPandas`` over the same grouping (UDF tier). The
 reference runs each function as a separate multiprocess task; Catalyst fuses
 ours into a handful of stages.
 
+Decomposable configs (every aggregate splits into exact partials, catalog
+``decomposition``) skip the per-row explode: ``calculate()`` buckets the
+rows ONCE at the gcd grain of all of them — one scan, one map-side-combined
+``groupBy(keys, bucket)`` computing each partial once — and rolls every
+such config out of that small table with the same segment assignment in
+bucket space plus a final aggregate (``_bucket_grains`` decides, for
+``calculate()`` and ``explain_features()`` alike). A config whose window
+would span too many shared buckets (co-prime windows) falls back to a table
+at its own grain; UDF-tier and holistic configs keep the one-level plan.
+Every segment path ends in the same spine / empty-fill / sparsity / output
+index tail (``_segment_tail``).
+
 Output naming grammar (API — ``reduce()`` parses it back):
 ``'|'.join(series)__<output>__w=<win_str>`` (reference strided_rolling.py:502-507).
 """
 
 from __future__ import annotations
 
+import time
 import warnings
 from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple, Union
 
@@ -94,9 +107,12 @@ _SPARSITY_WATCHERS: List = []
 
 
 def join_sparsity_watchers(timeout: float = 30.0) -> None:
-    """Wait for pending sparsity-warning watchers (deterministic tests)."""
+    """Wait for pending sparsity-warning watchers (deterministic tests),
+    ``timeout`` seconds in total. Newest first: a watcher whose plan never
+    ran blocks forever, so older ones only get what time is left."""
+    deadline = time.monotonic() + timeout
     while _SPARSITY_WATCHERS:
-        _SPARSITY_WATCHERS.pop().join(timeout=timeout)
+        _SPARSITY_WATCHERS.pop().join(timeout=max(0.0, deadline - time.monotonic()))
 
 
 def _resolve_dtype(dt: Any) -> T.DataType:
@@ -307,39 +323,17 @@ class FeatureCollection:
 
         Columns: output, series, window, strides, tier
         (``native``/``native2``/``udf``), fanout (row-duplication factor
-        of the one-level plan), two_level (whether the pre-aggregation
-        rewrite would apply to the descriptor's config). The Spark analog
-        of ``df.explain()`` for the feature compiler: a ``udf`` row in the
+        of the one-level plan), two_level (whether the descriptor's config
+        rolls out of a bucket table — the same decision ``calculate()``
+        takes, from ``_bucket_grains``). The Spark analog of
+        ``df.explain()`` for the feature compiler: a ``udf`` row in the
         hot path is the first thing to look for when a job is slow.
         """
-        from math import gcd
-
-        from tsflex_spark.features.catalog import decomposition, decomposition2
-
         rows = []
-        # group into configs exactly like calculate() does
-        cfg_entries: Dict[Tuple, List[Tuple]] = {}
-        for (series_tuple, win_str), fds in self._feature_desc_dict.items():
-            for fd in fds:
-                if fd.window is None or not fd.stride:
-                    cfg = ("manual",)
-                else:
-                    window_n = to_numeric_units(fd.window, is_time)
-                    strides_n = tuple(
-                        sorted({to_numeric_units(s, is_time) for s in fd.stride})
-                    )
-                    cfg = (window_n, strides_n)
-                cfg_entries.setdefault(cfg, []).append((series_tuple, win_str, fd))
-        for cfg, entries in cfg_entries.items():
-            native, udf = self._split_tiers(entries)
-            decomposable = not udf and bool(native)
-            for series_tuple, win_str, fd, spec in native:
-                if getattr(spec, "arity", 1) == 2:
-                    d = decomposition2(spec.name, fd.function.kwargs)
-                else:
-                    d = decomposition(spec.name, fd.function.kwargs)
-                if d is None:
-                    decomposable = False
+        configs = self._configs(is_time)
+        grains = self._bucket_grains(configs)
+        for cfg, entries in configs.items():
+            fanout = None if cfg[0] == "manual" else float(cfg[-2]) / min(cfg[-1])
             for series_tuple, win_str, fd in entries:
                 if len(series_tuple) == 1:
                     tier = "native" if fd.function.native_spec else "udf"
@@ -347,21 +341,6 @@ class FeatureCollection:
                     tier = "native2" if fd.function.native_spec2 else "udf"
                 else:
                     tier = "udf"
-                if cfg[0] == "manual":
-                    fanout, two = None, False
-                else:
-                    w, ss = cfg
-                    fanout = float(w) / min(ss)
-                    ints = all(
-                        float(x).is_integer() for x in (w, *ss)
-                    )
-                    g = gcd(*(int(x) for x in (w, *ss))) if ints else 0
-                    two = (
-                        decomposable
-                        and fanout >= self.TWO_LEVEL_FANOUT_THRESHOLD
-                        and g > 0
-                        and (int(w) // g) <= 4 * fanout
-                    )
                 for o in fd.function.output_names:
                     rows.append(
                         {
@@ -371,13 +350,47 @@ class FeatureCollection:
                             "strides": list(fd.stride) if fd.stride else None,
                             "tier": tier,
                             "fanout": fanout,
-                            "two_level": two,
+                            "two_level": cfg in grains,
                         }
                     )
         return pd.DataFrame(
             rows,
             columns=["output", "series", "window", "strides", "tier", "fanout", "two_level"],
         )
+
+    def _configs(
+        self, is_time: bool, stride: Optional[Any] = None, manual: Optional[str] = None
+    ) -> Dict[Tuple, List[Tuple[Tuple[str, ...], str, FeatureDescriptor]]]:
+        """Group ``(series, win_str, fd)`` entries by compiled config — the
+        fusion unit: ``(window, strides)`` on the numeric grid,
+        ``("count", window, strides)`` for an int window on a TIME index
+        (reference TimeIndexSampleStridedRolling,
+        strided_rolling_factory.py:74-98), ``("manual", window)`` for user
+        segments (``manual`` = ``"both"``/``"one"`` of the index arrays
+        given). ``explain_features`` passes no stride or segments; a
+        descriptor without window or stride then reports as manual."""
+        configs: Dict[Tuple, List[Tuple[Tuple[str, ...], str, FeatureDescriptor]]] = {}
+        for (series_tuple, win_str), fds in self._feature_desc_dict.items():
+            for fd in fds:
+                strides = [stride] if stride is not None else fd.stride
+                if manual == "both":
+                    cfg, win_str_eff = ("manual", None), "manual"
+                elif manual == "one":
+                    assert fd.window is not None, (
+                        "window required when only one of segment_start/end_idxs is given"
+                    )
+                    cfg, win_str_eff = ("manual", to_numeric_units(fd.window, is_time)), win_str
+                elif fd.window is None or not strides:
+                    cfg, win_str_eff = ("manual", None), win_str
+                elif is_time and isinstance(fd.window, int) and not isinstance(fd.window, bool):
+                    strides_c = tuple(sorted({int(s) for s in strides}))
+                    cfg, win_str_eff = ("count", int(fd.window), strides_c), win_str
+                else:
+                    strides_n = tuple(sorted({to_numeric_units(s, is_time) for s in strides}))
+                    cfg = (to_numeric_units(fd.window, is_time), strides_n)
+                    win_str_eff = win_str
+                configs.setdefault(cfg, []).append((series_tuple, win_str_eff, fd))
+        return configs
 
     # ------------------------------------------------------------- calculate
     def calculate(
@@ -465,45 +478,29 @@ class FeatureCollection:
             return bounds_cell[0]
 
         manual = segment_start_idxs is not None or segment_end_idxs is not None
-
-        # group descriptors by numeric (window, strides) config → fusion
-        configs: Dict[Tuple, List[Tuple[Tuple[str, ...], str, FeatureDescriptor]]] = {}
-        for (series_tuple, win_str), fds in self._feature_desc_dict.items():
-            for fd in fds:
-                if manual:
-                    cfg = ("manual",)
-                    if segment_start_idxs is not None and segment_end_idxs is not None:
-                        win_str_eff = "manual"
-                        window_n = None
-                    else:
-                        assert fd.window is not None, (
-                            "window required when only one of segment_start/end_idxs is given"
-                        )
-                        win_str_eff = win_str
-                        window_n = to_numeric_units(fd.window, is_time)
-                    cfg = ("manual", window_n)
-                    configs.setdefault(cfg, []).append((series_tuple, win_str_eff, fd))
-                    continue
-                strides = [stride] if stride is not None else fd.stride
+        if not manual:
+            for fd in self.descriptors:
                 assert fd.window is not None, f"descriptor {fd} has no window"
-                assert strides, (
+                assert stride is not None or fd.stride, (
                     f"descriptor {fd} has no stride and no stride-override/segment idxs given"
                 )
-                if is_time and isinstance(fd.window, int) and not isinstance(fd.window, bool):
-                    # int window on a TIME index = count-based segmentation
-                    # (reference TimeIndexSampleStridedRolling,
-                    # strided_rolling_factory.py:74-98, strided_rolling.py:627-698)
-                    window_c = int(fd.window)
-                    strides_c = tuple(sorted({int(s) for s in strides}))
-                    configs.setdefault(("count", window_c, strides_c), []).append(
-                        (series_tuple, win_str, fd)
-                    )
-                    continue
-                window_n = to_numeric_units(fd.window, is_time)
-                strides_n = tuple(sorted({to_numeric_units(s, is_time) for s in strides}))
-                configs.setdefault((window_n, strides_n), []).append((series_tuple, win_str, fd))
-
+        both = segment_start_idxs is not None and segment_end_idxs is not None
+        configs = self._configs(
+            is_time, stride, ("both" if both else "one") if manual else None
+        )
         check_sparsity = not approve_sparsity and not manual
+        # one bucket table per grain, shared by every config rolled out of it
+        grains = self._bucket_grains(configs)
+        tables: Dict[Any, Tuple[DataFrame, Dict[Tuple[str, str], str]]] = {}
+
+        def _table(grain) -> Tuple[DataFrame, Dict[Tuple[str, str], str]]:
+            if grain not in tables:
+                tables[grain] = self._bucket_table(
+                    data_n, _bounds(), grain,
+                    [configs[c] for c, g in grains.items() if g == grain],
+                    key_cols, check_sparsity,
+                )
+            return tables[grain]
 
         outputs: List[DataFrame] = []
         for cfg, entries in configs.items():
@@ -552,6 +549,7 @@ class FeatureCollection:
                         include_final_window, key_cols, window_idx, domain, ts_col,
                         check_sparsity=check_sparsity,
                         include_empty_windows=include_empty_windows,
+                        table=_table(grains[cfg]) if cfg in grains else None,
                     )
             outputs.append(out)
 
@@ -951,6 +949,57 @@ class FeatureCollection:
             .applyInPandas(run_bucket, schema)
         )
 
+    def _aggregate(
+        self,
+        assigned: DataFrame,
+        group_cols: List[str],
+        native: List[Tuple],
+        udf: List[Tuple],
+        domain: DataType,
+        extra: Sequence[Column] = (),
+    ) -> DataFrame:
+        """Native aggregates (plus ``extra``) in one ``groupBy``, the UDF
+        tier in one Arrow pass, full-joined on ``group_cols``."""
+        parts: List[DataFrame] = []
+        aggs = [*self._native_agg_exprs(native), *extra]
+        if aggs:
+            parts.append(assigned.groupBy(*group_cols).agg(*aggs))
+        if udf:
+            parts.append(self._udf_apply(assigned, udf, group_cols, domain))
+        result = parts[0]
+        for p in parts[1:]:
+            result = result.join(p, on=group_cols, how="full")
+        return result
+
+    def _segment_tail(
+        self,
+        result: DataFrame,
+        group_cols: List[str],
+        spine: Optional[DataFrame],
+        window_n,
+        native: List[Tuple],
+        spc_series: List[str],
+        window_idx: str,
+        domain: DataType,
+    ) -> DataFrame:
+        """The tail every segment path shares: restore empty segments from
+        ``spine`` (None: only segments with data, ``SEG_END`` derived from
+        ``window_n``), fill the natives' empty values, attach the sparsity
+        observer over the hidden ``__spc_i`` counts of ``spc_series``, and
+        add ``OUT_IDX`` per ``window_idx``."""
+        if spine is not None:
+            out = spine.join(result, on=group_cols, how="left")
+        else:
+            # sparse-data scale path: skip the grid spine entirely — with a
+            # fine stride over a long sparse span the spine is orders of
+            # magnitude larger than the data (#keys x span/stride rows)
+            out = result.withColumn(SEG_END, F.col(SEG) + F.lit(window_n))
+        for colname, fill in self._native_empty_fills(native).items():
+            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
+        if spc_series:
+            out = self._attach_sparsity_observer(out, spc_series)
+        return out.withColumn(OUT_IDX, seg.out_idx_expr(window_idx, domain))
+
     def _run_grid_config(
         self,
         data_n: DataFrame,
@@ -965,214 +1014,191 @@ class FeatureCollection:
         ts_col: str,
         check_sparsity: bool = False,
         include_empty_windows: bool = True,
+        table: Optional[Tuple[DataFrame, Dict[Tuple[str, str], str]]] = None,
     ) -> DataFrame:
+        """One (window, strides) config. Without ``table`` the one-level
+        plan: every row explodes into its ~window/stride segments (that
+        duplication factor goes through the shuffle), then one
+        ``groupBy``. With a bucket ``table`` (``_bucket_table``) the same
+        segment assignment runs in bucket space and the partials
+        final-aggregate per segment: shuffle volume drops from fanout ×
+        data to data + fanout × n_buckets. Derived results (mean/rms/std)
+        may then differ from the one-level plan in the last float ulp
+        (double-sum reassociation) — exact for decimal/integer inputs."""
         native, udf = self._split_tiers(entries)
         needed = sorted({s for series_tuple, _, _fd in entries for s in series_tuple})
-        two = self._try_two_level(
-            data_n.select(TSN, *key_cols, *needed), bounds, native, udf,
-            window_n, strides_n, include_final_window, key_cols, window_idx,
-            domain, ts_col, check_sparsity=check_sparsity,
-            include_empty_windows=include_empty_windows,
-        )
-        if two is not None:
-            return two
-        assigned = seg.assign_segments(
-            data_n.select(TSN, *key_cols, *needed),
-            bounds, window_n, strides_n, include_final_window, key_cols,
-        )
+        spc_series = needed if check_sparsity else []
         group_cols = [*key_cols, SEG]
-
-        # hidden per-series segment counts for the non-eager sparsity check
-        spc = (
-            [F.count(F.col(s)).alias(f"__spc_{i}") for i, s in enumerate(needed)]
-            if check_sparsity
-            else []
+        rows = data_n.select(TSN, *key_cols, *needed) if table is None else table[0]
+        assigned = seg.assign_segments(
+            rows, bounds, window_n, strides_n, include_final_window, key_cols
         )
-        parts: List[DataFrame] = []
-        if native:
-            parts.append(
-                assigned.groupBy(*group_cols).agg(*self._native_agg_exprs(native), *spc)
-            )
-        elif spc:
-            parts.append(assigned.groupBy(*group_cols).agg(*spc))
-        if udf:
-            parts.append(self._udf_apply(assigned, udf, group_cols, domain))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=group_cols, how="full")
-
-        if include_empty_windows:
-            spine = seg.make_segment_spine(
-                bounds, window_n, strides_n, include_final_window, key_cols
-            )
-            out = spine.join(result, on=group_cols, how="left")
+        if table is None:
+            # hidden per-series segment counts for the non-eager sparsity check
+            spc = [F.count(F.col(s)).alias(f"__spc_{i}") for i, s in enumerate(spc_series)]
+            result = self._aggregate(assigned, group_cols, native, udf, domain, spc)
         else:
-            # sparse-data scale path: skip the grid spine entirely — with a
-            # fine stride over a long sparse span the spine is orders of
-            # magnitude larger than the data (#keys x span/stride rows)
-            out = result.withColumn(SEG_END, F.col(SEG) + F.lit(window_n))
-        for colname, fill in self._native_empty_fills(native).items():
-            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
-        if spc:
-            out = self._attach_sparsity_observer(out, needed)
-        out = out.withColumn(OUT_IDX, seg.out_idx_expr(window_idx, domain))
+            aliases = table[1]
+
+            def _p(kind: str, sname: str) -> Column:
+                return F.col(f"`{aliases[(kind, sname)]}`")
+
+            final: List[Column] = []
+            for (series_tuple, win_str, fd, spec), (kinds, fin) in zip(
+                native, self._decompositions(native, udf)
+            ):
+                out_name = _col_name(series_tuple, fd.function.output_names[0], win_str)
+                sname = "|".join(series_tuple)
+                final.append(fin({k: _p(k, sname) for k in kinds}).alias(out_name))
+            # per-segment count = Σ per-bucket counts (exact)
+            for i, s in enumerate(spc_series):
+                final.append(F.sum(_p("cnt", s)).alias(f"__spc_{i}"))
+            result = assigned.groupBy(*group_cols).agg(*final)
+
+        spine = (
+            seg.make_segment_spine(bounds, window_n, strides_n, include_final_window, key_cols)
+            if include_empty_windows
+            else None
+        )
+        out = self._segment_tail(
+            result, group_cols, spine, window_n, native, spc_series, window_idx, domain
+        )
         out = out.withColumn(ts_col, seg.output_index(F.col(OUT_IDX), domain))
         return out.drop(SEG, SEG_END, OUT_IDX)
 
-    # pre-aggregation rewrite threshold: rewrite when a row would be
-    # duplicated into >= this many segments by the one-level explode
-    TWO_LEVEL_FANOUT_THRESHOLD = 8
+    # bucket-table threshold: a decomposable config rolls out of a bucket
+    # table when the one-level explode would copy a row into >= this many
+    # segments (10**9 forces every config one-level)
+    TWO_LEVEL_FANOUT_THRESHOLD = 2
 
-    def _try_two_level(
-        self,
-        data_sel: DataFrame,
-        bounds: DataFrame,
-        native: List[Tuple],
-        udf: List[Tuple],
-        window_n,
-        strides_n: List,
-        include_final_window: bool,
-        key_cols: List[str],
-        window_idx: str,
-        domain: DataType,
-        ts_col: str,
-        check_sparsity: bool = False,
-        include_empty_windows: bool = True,
-    ) -> Optional[DataFrame]:
-        """Two-level pre-aggregation for small-stride/large-window configs.
-
-        The one-level plan explodes every row into ~window/stride segments
-        — a window/stride data-duplication factor in the shuffle, fatal at
-        100 TB with fine strides. When every requested aggregate is
-        algebraically decomposable (catalog._DECOMPOSABLE), rewrite:
-
-        1. bucket rows at ``grain = gcd(window, strides)`` aligned to the
-           per-key START — one groupBy, NO row duplication, map-side
-           partial aggregation;
-        2. assign the (tiny) bucket table to segments with the normal
-           segment-assignment logic in bucket space (grain divides both
-           window and every stride, so buckets nest exactly);
-        3. final-aggregate partials per segment; same spine/fill tail.
-
-        Shuffle volume drops from fanout x data to data + fanout x
-        n_buckets. Derived results (mean/rms) may differ from the
-        one-level plan in the last float ulp (double-sum reassociation) —
-        exact for decimal/integer inputs. Returns None when the rewrite
-        does not apply.
-        """
-        from math import gcd
-
-        from tsflex_spark.features.catalog import (
-            decomposition,
-            decomposition2,
-            pair_partial_builder,
-            partial_builder,
-        )
+    @staticmethod
+    def _decompositions(native: List[Tuple], udf: List[Tuple]) -> Optional[List[Tuple]]:
+        """``(partial kinds, final builder)`` per native entry when every
+        aggregate of a config decomposes (catalog ``decomposition`` /
+        ``decomposition2``), else None."""
+        from tsflex_spark.features.catalog import decomposition, decomposition2
 
         if udf or not native:
             return None
-        nums = []
-        for x in [window_n, *strides_n]:
-            if isinstance(x, bool):
-                return None
-            if isinstance(x, int):
-                nums.append(x)
-            elif isinstance(x, float) and x.is_integer():
-                nums.append(int(x))
-            else:
-                return None
-        w, ss = nums[0], nums[1:]
-        fanout = w / min(ss)
-        if fanout < self.TWO_LEVEL_FANOUT_THRESHOLD:
-            return None
-        g = gcd(w, *ss)
-        # a tiny gcd (stride not dividing window) makes buckets ~rows: no win
-        if g <= 0 or (w // g) > 4 * fanout:
-            return None
         decos = []
-        for series_tuple, win_str, fd, spec in native:
-            if getattr(spec, "arity", 1) == 2:
-                d = decomposition2(spec.name, fd.function.kwargs)
-            else:
-                d = decomposition(spec.name, fd.function.kwargs)
+        for _st, _ws, fd, spec in native:
+            pair = getattr(spec, "arity", 1) == 2
+            d = (decomposition2 if pair else decomposition)(spec.name, fd.function.kwargs)
             if d is None:
                 return None
             decos.append(d)
+        return decos
 
-        # 1. bucket partials (aligned to per-key START)
+    def _bucket_grains(self, configs: Dict[Tuple, List[Tuple]]) -> Dict[Tuple, int]:
+        """The path decision, shared by ``calculate()`` and
+        ``explain_features()``: the bucket grain of every grid config that
+        rolls out of a bucket table; configs absent from the result keep
+        the one-level plan.
+
+        A config qualifies when every aggregate decomposes, window and
+        strides are integers, and its fan-out ``w / min(strides)`` is at
+        least ``TWO_LEVEL_FANOUT_THRESHOLD`` (2). A tumbling config
+        (fan-out 1) keeps the one-level plan: its explode copies no row,
+        and a lone one (4 keys, 230k rows, 4 cores) runs 9 jobs / 15
+        stages there against 10 / 18 through a bucket table, which adds an
+        aggregation stage and its shuffle. A grain ``g`` is usable
+        for a config when its window spans at most ``4 × fanout`` buckets
+        (``w // g``); a tiny grain makes the buckets about as many as the
+        rows. Configs join one table at the gcd of all their windows and
+        strides while that grain stays usable for every member; a config
+        it would be too fine for (co-prime windows) falls back to a table
+        at its own ``gcd(window, strides)``."""
+        from math import gcd
+
+        groups: List[List] = []  # [grain, [(cfg, w, fanout), ...]]
+        for cfg, entries in configs.items():
+            if cfg[0] in ("manual", "count"):
+                continue
+            if self._decompositions(*self._split_tiers(entries)) is None:
+                continue
+            nums = [cfg[0], *cfg[1]]
+            if not all(
+                isinstance(x, int) and not isinstance(x, bool)
+                or isinstance(x, float) and x.is_integer()
+                for x in nums
+            ):
+                continue
+            w, ss = int(nums[0]), [int(x) for x in nums[1:]]
+            fanout, g = w / min(ss), gcd(w, *ss)
+            if fanout < self.TWO_LEVEL_FANOUT_THRESHOLD or g <= 0 or w // g > 4 * fanout:
+                continue
+            member = (cfg, w, fanout)
+            for group in groups:
+                shared = gcd(group[0], g)
+                if all(mw // shared <= 4 * mf for _c, mw, mf in [*group[1], member]):
+                    group[0] = shared
+                    group[1].append(member)
+                    break
+            else:
+                groups.append([g, [member]])
+        return {cfg: grain for grain, members in groups for cfg, _w, _f in members}
+
+    def _bucket_table(
+        self,
+        data_n: DataFrame,
+        bounds: DataFrame,
+        grain: int,
+        config_entries: List[List[Tuple]],
+        key_cols: List[str],
+        check_sparsity: bool,
+    ) -> Tuple[DataFrame, Dict[Tuple[str, str], str]]:
+        """The bucket table the configs of ``config_entries`` roll out of:
+        rows bucket at ``grain`` aligned to the per-key START (``grain``
+        divides every window and stride, so buckets nest exactly in every
+        segment), one ``groupBy`` with NO row duplication and map-side
+        partial aggregation. Each partial (``sum``, ``sumsq``, ``cnt``,
+        ``min``, ``max``, …) of each series is computed once, whichever
+        configs need it; returns the table (bucket start in ``TSN``) and
+        the partial column per ``(kind, series)``.
+
+        A bucket row exists iff a data row does, whatever the series'
+        nulls — exactly the rows the one-level plan keeps — so one table
+        over the union of the configs' series serves every subset."""
+        from tsflex_spark.features.catalog import pair_partial_builder, partial_builder
+
+        aliases: Dict[Tuple[str, str], str] = {}
+        aggs: List[Column] = []
+
+        def _add(kind: str, series_tuple: Tuple[str, ...]) -> None:
+            sname = "|".join(series_tuple)
+            if (kind, sname) in aliases:
+                return
+            aliases[(kind, sname)] = alias = f"__p_{kind}_{sname}"
+            cols = [F.col(s) for s in series_tuple]
+            if len(cols) == 2:
+                expr = pair_partial_builder(kind)(*cols)
+            else:
+                expr = partial_builder(kind)(cols[0], F.col(TSN))
+            aggs.append(expr.alias(alias))
+
+        series: Dict[str, None] = {}
+        for entries in config_entries:
+            native, udf = self._split_tiers(entries)
+            for (series_tuple, _ws, _fd, _spec), (kinds, _fin) in zip(
+                native, self._decompositions(native, udf)
+            ):
+                for kind in kinds:
+                    _add(kind, series_tuple)
+            for series_tuple, _ws, _fd in entries:
+                for s in series_tuple:
+                    series.setdefault(s)
+                    if check_sparsity:
+                        _add("cnt", (s,))
+        rows = data_n.select(TSN, *key_cols, *series)
         if key_cols:
-            joined = data_sel.join(F.broadcast(bounds), on=list(key_cols), how="inner")
+            joined = rows.join(F.broadcast(bounds), on=list(key_cols), how="inner")
         else:
-            joined = data_sel.crossJoin(F.broadcast(bounds))
+            joined = rows.crossJoin(F.broadcast(bounds))
         joined = joined.where((F.col(TSN) >= F.col(START)) & (F.col(TSN) <= F.col(END)))
-        bkt = F.col(START) + F.floor((F.col(TSN) - F.col(START)) / F.lit(g)).cast("long") * F.lit(g)
-        joined = joined.withColumn("__bkt", bkt)
-
-        partial_exprs: Dict[Tuple[str, str], str] = {}
-        agg_list: List[Column] = []
-        for (series_tuple, _ws, _fd, spec), (kinds, _fin) in zip(native, decos):
-            pair = getattr(spec, "arity", 1) == 2
-            sname = "|".join(series_tuple) if pair else series_tuple[0]
-            for kind in kinds:
-                key = (kind, sname)
-                if key not in partial_exprs:
-                    alias = f"__p_{kind}_{sname}"
-                    partial_exprs[key] = alias
-                    if pair:
-                        expr = pair_partial_builder(kind)(
-                            F.col(series_tuple[0]), F.col(series_tuple[1])
-                        )
-                    else:
-                        expr = partial_builder(kind)(F.col(sname), F.col(TSN))
-                    agg_list.append(expr.alias(alias))
-        # sparsity check rides the same partial/final aggregation (counts
-        # decompose exactly: per-segment count = Σ per-bucket counts)
-        spc_series = (
-            sorted({st[0] for st, _ws, _fd, _sp in native}) if check_sparsity else []
-        )
-        for sname in spc_series:
-            key = ("cnt", sname)
-            if key not in partial_exprs:
-                alias = f"__p_cnt_{sname}"
-                partial_exprs[key] = alias
-                agg_list.append(partial_builder("cnt")(F.col(sname), F.col(TSN)).alias(alias))
-        partials = joined.groupBy(*key_cols, "__bkt").agg(*agg_list)
-
-        # 2. bucket table -> segment assignment in bucket space
-        btab = partials.withColumnRenamed("__bkt", TSN)
-        assigned = seg.assign_segments(
-            btab, bounds, w, [int(x) for x in ss], include_final_window, key_cols
-        )
-        group_cols = [*key_cols, SEG]
-
-        # 3. final aggregation over each segment's buckets
-        final_exprs: List[Column] = []
-        for (series_tuple, win_str, fd, spec), (kinds, fin) in zip(native, decos):
-            pair = getattr(spec, "arity", 1) == 2
-            sname = "|".join(series_tuple) if pair else series_tuple[0]
-            out_name = _col_name(series_tuple, fd.function.output_names[0], win_str)
-            pcols = {k: F.col(f"`{partial_exprs[(k, sname)]}`") for k in kinds}
-            final_exprs.append(fin(pcols).alias(out_name))
-        for i, sname in enumerate(spc_series):
-            final_exprs.append(
-                F.sum(F.col(partial_exprs[("cnt", sname)])).alias(f"__spc_{i}")
-            )
-        result = assigned.groupBy(*group_cols).agg(*final_exprs)
-
-        if include_empty_windows:
-            spine = seg.make_segment_spine(
-                bounds, w, [int(x) for x in ss], include_final_window, key_cols
-            )
-            out = spine.join(result, on=group_cols, how="left")
-        else:
-            out = result.withColumn(SEG_END, F.col(SEG) + F.lit(w))
-        for colname, fill in self._native_empty_fills(native).items():
-            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
-        if spc_series:
-            out = self._attach_sparsity_observer(out, spc_series)
-        out = out.withColumn(OUT_IDX, seg.out_idx_expr(window_idx, domain))
-        out = out.withColumn(ts_col, seg.output_index(F.col(OUT_IDX), domain))
-        return out.drop(SEG, SEG_END, OUT_IDX)
+        g = F.lit(grain)
+        bkt = F.col(START) + F.floor((F.col(TSN) - F.col(START)) / g).cast("long") * g
+        table = joined.withColumn("__bkt", bkt).groupBy(*key_cols, "__bkt").agg(*aggs)
+        return table.withColumnRenamed("__bkt", TSN), aliases
 
     def _run_count_config(
         self,
@@ -1228,28 +1254,19 @@ class FeatureCollection:
         )
         group_cols = [*key_cols, SEG]
         native, udf = self._split_tiers(entries)
-        parts: List[DataFrame] = []
-        if native:
-            parts.append(assigned.groupBy(*group_cols).agg(*self._native_agg_exprs(native)))
-        if udf:
-            # count-based windows run in position space — index-aware funcs
-            # see the sample position, not the stitched time index
-            parts.append(self._udf_apply(assigned, udf, group_cols, DataType.SEQUENCE))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=group_cols, how="full")
-
-        if include_empty_windows:
-            spine = seg.make_segment_spine(
-                bounds, window_c, strides_c, include_final_window, key_cols
-            )
-            out = spine.join(result, on=group_cols, how="left")
-        else:
-            out = result.withColumn(SEG_END, F.col(SEG) + F.lit(window_c))
-        for colname, fill in self._native_empty_fills(native).items():
-            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
+        # count-based windows run in position space — index-aware UDF-tier
+        # funcs see the sample position, not the stitched time index
+        result = self._aggregate(assigned, group_cols, native, udf, DataType.SEQUENCE)
+        spine = (
+            seg.make_segment_spine(bounds, window_c, strides_c, include_final_window, key_cols)
+            if include_empty_windows
+            else None
+        )
+        out = self._segment_tail(
+            result, group_cols, spine, window_c, native, [], window_idx, DataType.SEQUENCE
+        )
         # positions are integers; middle floors (numpy int division)
-        out = out.withColumn(OUT_IDX, F.floor(seg.out_idx_expr(window_idx, DataType.SEQUENCE)))
+        out = out.withColumn(OUT_IDX, F.floor(F.col(OUT_IDX)))
         out = out.join(pos_map, on=[*key_cols, OUT_IDX], how="left")
         out = out.withColumn(ts_col, seg.output_index(F.col("__out_tsn"), DataType.TIME))
         return out.drop(SEG, SEG_END, OUT_IDX, "__out_tsn")
@@ -1310,22 +1327,12 @@ class FeatureCollection:
         max_len = float(np.max(ends - starts)) if len(starts) else 1.0
         assigned = seg.assign_manual_segments(
             data_n.select(TSN, *key_cols, *needed), spine, max_len, key_cols
-        )
+        ).drop(SEG, SEG_END)
         group_cols = [*key_cols, SEG_ID]
-
-        parts: List[DataFrame] = []
-        if native:
-            parts.append(assigned.groupBy(*group_cols).agg(*self._native_agg_exprs(native)))
-        if udf:
-            parts.append(self._udf_apply(assigned.drop(SEG, SEG_END), udf, group_cols, domain))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=group_cols, how="full")
-
-        out = spine.join(result, on=group_cols, how="left")
-        for colname, fill in self._native_empty_fills(native).items():
-            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
-        out = out.withColumn(OUT_IDX, seg.out_idx_expr(window_idx, domain))
+        result = self._aggregate(assigned, group_cols, native, udf, domain)
+        out = self._segment_tail(
+            result, group_cols, spine, None, native, [], window_idx, domain
+        )
         out = out.withColumn(ts_col, seg.output_index(F.col(OUT_IDX), domain))
         return out.drop(SEG, SEG_END, SEG_ID, OUT_IDX)
 
@@ -1372,15 +1379,7 @@ class FeatureCollection:
             if isinstance(data.schema[g].dataType, (T.FloatType, T.DoubleType)):
                 c = c & ~F.isnan(F.col(g))
             cond = cond & c
-        clean = data_n.where(cond)
-        parts: List[DataFrame] = []
-        if native:
-            parts.append(clean.groupBy(*gcols).agg(*self._native_agg_exprs(native)))
-        if udf:
-            parts.append(self._udf_apply(clean, udf, gcols, domain))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=gcols, how="full")
+        result = self._aggregate(data_n.where(cond), gcols, native, udf, domain)
         feat_cols = sorted(c for c in result.columns if c not in gcols)
         return result.select(*gcols, *[F.col(f"`{c}`") for c in feat_cols]).orderBy(*gcols)
 
@@ -1425,13 +1424,7 @@ class FeatureCollection:
             F.min(TSN).alias("__start_n"),
             F.max(TSN).alias("__last_n"),
         ]
-        parts: List[DataFrame] = []
-        parts.append(islands.groupBy(*group_cols).agg(*base_aggs, *self._native_agg_exprs(native)))
-        if udf:
-            parts.append(self._udf_apply(islands, udf, group_cols, domain))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=group_cols, how="full")
+        result = self._aggregate(islands, group_cols, native, udf, domain, base_aggs)
         # reported __end = the run's last member index (reference :713-714;
         # the +1day/+1 exclusive bump only feeds the reference's INTERNAL
         # slicing, which island membership already encodes here — so no
